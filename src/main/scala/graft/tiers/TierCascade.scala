@@ -30,28 +30,27 @@ object TierCascade {
     *        Histogram rollup (north_star "histogram/summary rollups").
     * @param withPages also materialize Gorilla delta-of-delta+XOR binary
     *        pages per (series, hour), resumable like every other tier.
-    * @param copartition share ONE series-hash exchange across every raw
-    *        consumer (applies when salts == 1). The raw observations are
-    *        repartitioned by `series`, sorted by (series, ts, seq) within
-    *        partitions, and persisted; then (a) the 1m aggregates run
-    *        EXCHANGE-FREE — HashPartitioning(series) satisfies the groupBy's
-    *        ClusteredDistribution(series, bucket), so Catalyst elides the
-    *        shuffle — and (b) the pages pass consumes the arrangement
-    *        directly (Pages.pagesFromObs preArranged). Why this wins at
-    *        scale: with few observations per (series, bucket) cell relative
-    *        to the map-partition count, map-side combine compresses almost
-    *        nothing, so the aggregate's "partial" shuffle carries ~one WIDE
-    *        partial row (rollup fields + histogram rungs) per input row,
-    *        and the pages chain shuffles the raw rows AGAIN — the
-    *        co-partitioned form shuffles the narrow 4-column rows exactly
-    *        once for both (measured: 732 → 439 MB zstd shuffle bytes, lo
-    *        wall −14–17% and clean hi wall −9% at bench scale, the dominant
-    *        stage exchange-free; BENCH.md "co-partitioned-cascade A/B").
-    *        This is the absolute-wall / network-bytes shape for real
-    *        clusters; the bench's graded 2→8 ratio prefers the standard
-    *        shape on this one-socket box (see the A/B note). Skew bound:
-    *        one series must fit one task's share — with hot KEYS (not hot
-    *        series) the salted path remains the tool.
+    *
+    * Schedule. The chains — sum tiers (raw→1m→1h→1d), histogram tiers
+    * (raw→hist_1m→1h→1d) and Gorilla pages (raw→pages_1h) — have no data
+    * dependencies on each other, so each runs on its own pool thread
+    * (Spark schedules jobs from several threads on one session) and their
+    * commit phases overlap. Within a chain each tier reads only the previous
+    * tier's committed partitions.
+    *
+    * The sum and histogram 1m tiers group by the same (series, bucket-60s)
+    * key, so when both are requested on the unsalted path ONE fused
+    * aggregate produces both. It is persisted and counted on the calling
+    * thread before the two chains that read it are submitted, so they read
+    * the cache instead of racing to recompute it. The pages chain never
+    * reads it and is submitted first: the fused aggregate is the cascade's
+    * one serial stage, and the independent pages scan+shuffle overlaps it
+    * (BENCH.md round 5). Results come back as sum ++ histogram ++ pages.
+    *
+    * A failure anywhere cancels the chains that have not started and waits
+    * for those that have, then the fused cache is released; the first
+    * failure propagates as the chain's own exception, not the pool's
+    * ExecutionException wrapper.
     */
   def run(
       spark: SparkSession,
@@ -60,91 +59,22 @@ object TierCascade {
       seriesBuckets: Int = 8,
       salts: Int = 1,
       withHistograms: Boolean = false,
-      withPages: Boolean = false,
-      cacheObs: Boolean = false,
-      copartition: Boolean = false,
-      pagesFirst: Boolean = true): Seq[TierResult] = {
-    // One shared scan for the three raw consumers (1m rollup, histogram,
-    // pages): obs is a narrow 4-column projection, far smaller than the raw
-    // table, so caching it trades a bounded memory footprint for two full
-    // re-reads of the source (which this sandbox's proactive page-cache
-    // reclaim makes disk-bound every time).
-    val obsIn = if (cacheObs) obs.persist() else obs
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[cascade] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-    // Co-partitioned arrangement (see the `copartition` param doc): one
-    // narrow-row series-hash exchange, sorted within partitions, persisted —
-    // every raw consumer below reads it instead of re-shuffling.
-    val arranged: Option[DataFrame] =
-      if (copartition && salts == 1) {
-        val p = obsIn
-          .select(col("series"), col("ts"), col("seq"), col("value"))
-          .repartition(col("series"))
-          .sortWithinPartitions("series", "ts", "seq")
-          .persist()
-        timed("copartition series exchange")(p.count())
-        Some(p)
-      } else None
-    val obsSrc = arranged.getOrElse(obsIn)
-
-    // The three chains — sum tiers (raw→1m→1h→1d), histogram tiers
-    // (raw→hist_1m→1h→1d) and Gorilla pages (raw→pages_1h) — have no data
-    // dependencies on each other, so they materialize CONCURRENTLY from
-    // driver threads (Spark schedules jobs from multiple threads on one
-    // session): independent sinks overlap each other's driver-side commit
-    // phases and keep executors busy end to end, exactly as a production
-    // pipeline with several sinks would. Order within a chain is preserved
-    // (each tier reads only the previous tier's committed partitions).
-    //
-    // FUSED 1m stage: the sum and histogram 1m tiers group by the SAME
-    // (series, bucket-60s) key, so materializing them separately scans and
-    // shuffles the raw table twice for the same grouping. When both are
-    // requested (and the unsalted single-phase plan applies), ONE fused
-    // aggregate produces both; it is persisted — tier-1m cardinality, raw
-    // cardinality divided by the per-cell observation count, MEMORY_AND_DISK
-    // — and materialized BEFORE the sum/hist chains launch so both 1m
-    // writes read the cache instead of racing to recompute the aggregation.
-    // It is, however, materialized AFTER the pages chain is launched: pages
-    // never reads it, and the fused aggregate is the cascade's one serial
-    // stage — a per-stage probe (BENCH.md round 5) measured it at 29–54% of
-    // the high-parallelism wall while the independent pages scan+shuffle
-    // sat queued behind it. Overlapping the two costs the
-    // throughput-bound low level nothing and removes a pure serial floor
-    // everywhere the cluster has headroom.
-    // the fused frame is RETURNED and passed into the consuming chains as a
-    // parameter (round 6, ADVICE fix): the previous `var fused1m` was
-    // written on the calling thread and read from pool threads, safe only
-    // via the implicit submission-order invariant — structural now.
-    def materializeFused(): Option[DataFrame] =
-      if (withHistograms && salts == 1) {
-        val f = TierRollup.fromObsWithHistogram(
-          obsSrc, graft.model.Schemas.bucketLadder, 60L).persist()
-        timed("raw->1m/hist_1m fused agg")(f.count())
-        Some(f)
-      } else None
+      withPages: Boolean = false): Seq[TierResult] = {
+    def append(table: LakeTable, df: DataFrame, lineage: String): Seq[String] =
+      table.append(df.withColumn("pk", partKey(seriesBuckets)), lineage = lineage)
 
     def sumChain(fused1m: Option[DataFrame]): Seq[TierResult] = {
       val t1m = fused1m.map(TierRollup.tierColumns).getOrElse(
-        if (salts > 1) TierRollup.fromObsSalted(obsIn, 60L, salts)
-        else TierRollup.fromObs(obsSrc, 60L))
+        if (salts > 1) TierRollup.fromObsSalted(obs, 60L, salts)
+        else TierRollup.fromObs(obs, 60L))
       val lake1m = new LakeTable(spark, basePath, "tier_1m", "pk")
-      val new1m = timed("raw->1m")(lake1m.append(t1m.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "raw->1m rollup bucket=60s"))
-
+      val new1m = append(lake1m, t1m, "raw->1m rollup bucket=60s")
       val lake1h = new LakeTable(spark, basePath, "tier_1h", "pk")
-      val t1h = TierRollup.mergeTier(lake1m.read().drop("pk"), 3600L)
-      val new1h = timed("1m->1h")(lake1h.append(t1h.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "1m->1h mergeTier bucket=3600s"))
-
+      val new1h = append(lake1h, TierRollup.mergeTier(lake1m.read().drop("pk"), 3600L),
+        "1m->1h mergeTier bucket=3600s")
       val lake1d = new LakeTable(spark, basePath, "tier_1d", "pk")
-      val t1d = TierRollup.mergeTier(lake1h.read().drop("pk"), 86400L)
-      val new1d = timed("1h->1d")(lake1d.append(t1d.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "1h->1d mergeTier bucket=86400s"))
+      val new1d = append(lake1d, TierRollup.mergeTier(lake1h.read().drop("pk"), 86400L),
+        "1h->1d mergeTier bucket=86400s")
       Seq(TierResult("1m", lake1m, new1m), TierResult("1h", lake1h, new1h),
         TierResult("1d", lake1d, new1d))
     }
@@ -153,82 +83,62 @@ object TierCascade {
       val ladder = graft.model.Schemas.bucketLadder
       val lakeH1m = new LakeTable(spark, basePath, "hist_1m", "pk")
       val h1m = fused1m.map(TierRollup.histColumns)
-        .getOrElse(TierRollup.histogramFromObs(obsSrc, ladder, 60L))
-      val newH1m = timed("raw->hist_1m")(lakeH1m.append(h1m.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "raw->hist_1m cumulative ladder"))
+        .getOrElse(TierRollup.histogramFromObs(obs, ladder, 60L))
+      val newH1m = append(lakeH1m, h1m, "raw->hist_1m cumulative ladder")
       val lakeH1h = new LakeTable(spark, basePath, "hist_1h", "pk")
-      val newH1h = timed("hist_1m->1h")(lakeH1h.append(
-        TierRollup.mergeHistogramTier(lakeH1m.read().drop("pk"), ladder.length, 3600L)
-          .withColumn("pk", partKey(seriesBuckets)),
-        lineage = "hist_1m->hist_1h bucket merge"))
+      val newH1h = append(lakeH1h,
+        TierRollup.mergeHistogramTier(lakeH1m.read().drop("pk"), ladder.length, 3600L),
+        "hist_1m->hist_1h bucket merge")
       val lakeH1d = new LakeTable(spark, basePath, "hist_1d", "pk")
-      val newH1d = timed("hist_1h->1d")(lakeH1d.append(
-        TierRollup.mergeHistogramTier(lakeH1h.read().drop("pk"), ladder.length, 86400L)
-          .withColumn("pk", partKey(seriesBuckets)),
-        lineage = "hist_1h->hist_1d bucket merge"))
+      val newH1d = append(lakeH1d,
+        TierRollup.mergeHistogramTier(lakeH1h.read().drop("pk"), ladder.length, 86400L),
+        "hist_1h->hist_1d bucket merge")
       Seq(TierResult("hist_1m", lakeH1m, newH1m), TierResult("hist_1h", lakeH1h, newH1h),
         TierResult("hist_1d", lakeH1d, newH1d))
     }
 
     def pagesChain(): Seq[TierResult] = {
       val lakeP = new LakeTable(spark, basePath, "pages_1h", "pk")
-      val p = graft.functions.Pages.pagesFromObs(obsSrc, 3600L,
-        preArranged = arranged.nonEmpty)
-      val newP = timed("raw->pages_1h")(lakeP.append(p.withColumn("pk", partKey(seriesBuckets)),
-        lineage = "raw->pages_1h gorilla dod+xor"))
+      val newP = append(lakeP, graft.functions.Pages.pagesFromObs(obs, 3600L),
+        "raw->pages_1h gorilla dod+xor")
       Seq(TierResult("pages_1h", lakeP, newP))
     }
 
-    def callable(c: () => Seq[TierResult]) =
-      new java.util.concurrent.Callable[Seq[TierResult]] {
-        def call(): Seq[TierResult] = c()
-      }
     val nChains = 1 + (if (withHistograms) 1 else 0) + (if (withPages) 1 else 0)
-    var fusedOpt: Option[DataFrame] = None
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(nChains)
+    val submitted =
+      scala.collection.mutable.Buffer.empty[java.util.concurrent.Future[Seq[TierResult]]]
+    def submit(c: () => Seq[TierResult]) = {
+      val f = pool.submit(new java.util.concurrent.Callable[Seq[TierResult]] {
+        def call(): Seq[TierResult] = c()
+      })
+      submitted += f
+      f
+    }
+    var fused1m: Option[DataFrame] = None
     try {
-      if (nChains == 1) { fusedOpt = materializeFused(); sumChain(fusedOpt) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(nChains)
-        val submitted =
-          scala.collection.mutable.Buffer.empty[java.util.concurrent.Future[Seq[TierResult]]]
-        def submit(c: () => Seq[TierResult]) = {
-          val f = pool.submit(callable(c)); submitted += f; f
-        }
-        try {
-          // pages FIRST (it reads raw, not the fused cache), THEN the fused
-          // materialize on the calling thread — the overlap removes the
-          // cascade's serial floor (see the fused-stage note above) —
-          // then the chains that consume the fused cache.
-          val pagesEarly =
-            if (withPages && pagesFirst) Some(submit(() => pagesChain()))
-            else None
-          fusedOpt = materializeFused()
-          val fused = fusedOpt
-          val pagesF = pagesEarly.orElse(
-            if (withPages) Some(submit(() => pagesChain())) else None)
-          val sumF = submit(() => sumChain(fused))
-          val histF =
-            if (withHistograms) Some(submit(() => histChain(fused))) else None
-          sumF.get() ++ histF.map(_.get()).getOrElse(Nil) ++
-            pagesF.map(_.get()).getOrElse(Nil)
-        } catch {
-          // a failure on the calling thread (e.g. the fused materialize) or
-          // in one chain must not abandon in-flight sibling futures: cancel
-          // what hasn't started, drain what has (their exceptions are
-          // secondary — the first failure propagates), so the pool winds
-          // down and the finally below can release every persist (round 6,
-          // ADVICE fix — the pages future used to leak with its exception
-          // swallowed and the persists skipped).
-          case t: Throwable =>
-            submitted.foreach(_.cancel(false))
-            submitted.foreach(f => try f.get() catch { case _: Throwable => () })
-            throw t
-        } finally pool.shutdown()
+      val pagesF = if (withPages) Some(submit(() => pagesChain())) else None
+      if (withHistograms && salts == 1) {
+        val f = TierRollup.fromObsWithHistogram(
+          obs, graft.model.Schemas.bucketLadder, 60L).persist()
+        fused1m = Some(f) // before the count, so a failing count is still released
+        f.count()
       }
+      val fused = fused1m
+      val sumF = submit(() => sumChain(fused))
+      val histF = if (withHistograms) Some(submit(() => histChain(fused))) else None
+      sumF.get() ++ histF.map(_.get()).getOrElse(Nil) ++ pagesF.map(_.get()).getOrElse(Nil)
+    } catch {
+      case t: Throwable =>
+        submitted.foreach(_.cancel(false))
+        submitted.foreach(f => try f.get() catch { case _: Throwable => () })
+        throw (t match {
+          case e: java.util.concurrent.ExecutionException if e.getCause != null => e.getCause
+          case _ => t
+        })
     } finally {
-      fusedOpt.foreach(_.unpersist(blocking = false))
-      arranged.foreach(_.unpersist(blocking = false))
-      if (cacheObs) obsIn.unpersist(blocking = false)
+      pool.shutdown()
+      fused1m.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -123,15 +123,28 @@ class RollupSpec extends AnyFunSuite {
       s"fused agg must stay hash-based and sort-free:\n$plan")
   }
 
-  test("co-partitioned cascade: every tier, histogram and page byte-stream " +
-      "equals the standard run (skewed fixture)") {
+  test("bench-shape cascade (fused 1m, histograms, pages): salts=1 equals salts=2 " +
+      "row for row and leaves nothing persisted, also when the input fails") {
     import java.nio.file.Files
     val obs = obsDf(20000, skewed = true)
-    def runAll(copart: Boolean): Map[String, Set[String]] = {
-      val base = Files.createTempDirectory("copart").toString
-      val results = TierCascade.run(spark, obs, base, seriesBuckets = 4,
-        salts = 1, withHistograms = true, withPages = true,
-        copartition = copart)
+    val tierNames = Seq("1m", "1h", "1d", "hist_1m", "hist_1h", "hist_1d", "pages_1h")
+    // Earlier suites share this session: clear their Dataset caches so the
+    // cacheManager check speaks only for the cascade, and compare persisted
+    // RDDs by id.
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    def cascade(in: DataFrame, salts: Int): Seq[TierCascade.TierResult] =
+      TierCascade.run(spark, in, Files.createTempDirectory("cascade").toString,
+        seriesBuckets = 4, salts = salts, withHistograms = true, withPages = true)
+    def assertNothingPersisted(moment: String): Unit = {
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(leaked.isEmpty, s"persistent RDDs $leaked left $moment")
+      assert(spark.sharedState.cacheManager.isEmpty, s"cache entries left $moment")
+    }
+    def rowsByTier(salts: Int): Map[String, Set[String]] = {
+      val results = cascade(obs, salts)
+      assertNothingPersisted(s"after the salts=$salts run")
+      assert(results.map(_.name) == tierNames)
       results.map { tr =>
         val rows = tr.table.read().drop("pk").collect().map { r =>
           r.toSeq.map {
@@ -140,36 +153,20 @@ class RollupSpec extends AnyFunSuite {
             case x => String.valueOf(x)
           }.mkString("|")
         }.toSet
+        assert(rows.nonEmpty, s"tier ${tr.name} is empty")
         tr.name -> rows
       }.toMap
     }
-    val std = runAll(copart = false)
-    val cop = runAll(copart = true)
-    assert(std.keySet == cop.keySet)
-    std.foreach { case (name, rows) =>
-      assert(cop(name) == rows, s"tier $name diverges under copartition")
-    }
-  }
+    val fused = rowsByTier(salts = 1)
+    val salted = rowsByTier(salts = 2)
+    tierNames.foreach(name =>
+      assert(fused(name) == salted(name), s"tier $name diverges between salts=1 and salts=2"))
 
-  test("co-partitioned fused agg plans exchange-free above the arrangement") {
-    val arrangedObs = obsDf(5000)
-      .repartition(col("series"))
-      .sortWithinPartitions("series", "ts", "seq")
-      .persist()
-    try {
-      arrangedObs.count()
-      val fused = TierRollup.fromObsWithHistogram(arrangedObs,
-        Schemas.bucketLadder, 60L)
-      fused.count()
-      val plan = fused.queryExecution.executedPlan.toString
-      // the only exchange is INSIDE the cached arrangement; above the cache
-      // boundary the aggregate must be exchange-free and hash-based
-      val above = plan.split("InMemoryRelation").head
-      assert(!above.contains("Exchange"),
-        s"expected no exchange above the arrangement cache:\n$plan")
-      assert(above.contains("HashAggregate") && !above.contains("SortAggregate"),
-        s"expected hash aggregation:\n$plan")
-    } finally arrangedObs.unpersist()
+    val failing = obs.withColumn("value",
+      when(col("seq") >= 10000L, raise_error(lit("injected failure"))).otherwise(col("value")))
+    val err = intercept[Exception](cascade(failing, salts = 1))
+    assert(!err.isInstanceOf[java.util.concurrent.ExecutionException], err)
+    assertNothingPersisted("after a failed run")
   }
 
   test("histogram_quantile: interpolation, first-rung lower bound 0, overflow fallback, empty null") {
