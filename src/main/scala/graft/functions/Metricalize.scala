@@ -383,62 +383,6 @@ object Metricalize {
         col("mismatches"))
   }
 
-  /** Streaming metricalize: the reference flushes its state map on a
-    * processing-time tick (metricalize.rs:161-190); here the flush is an
-    * EVENT-TIME tumbling window + watermark, so emission is deterministic
-    * and replayable. One row per (window, name, tags, kind): because each
-    * window's state starts empty (the tick analog), a kind conflict within a
-    * window yields one row PER KIND rather than the arrival-order reset —
-    * a documented simplification this aggregation-only form keeps for its
-    * lower state cost; [[metricalizeStreamReplay]] is the stateful form
-    * that replays the exact batch reset semantics across micro-batches.
-    *
-    * `ordCol` breaks ties for gauge last-write-wins; append-mode compatible.
-    */
-  def metricalizeStream(
-      df: DataFrame,
-      propsCol: String,
-      specs: Seq[MetricSpec],
-      tsCol: String,
-      bucketSec: Long,
-      ordCol: Column,
-      watermark: String = "10 minutes"): DataFrame = {
-    require(specs.nonEmpty, "at least one MetricSpec")
-    val ladder = unionLadder(specs)
-    val kinds = specs.map(_.kind).distinct.sorted
-    val (base, ext, skeyOf) = withSharedExtractsAndKeys(df, propsCol, specs,
-      withKeys = true)
-    base
-      .withColumn("_ts", col(tsCol))
-      .withWatermark("_ts", watermark)
-      .select(col("_ts"),
-        explode(array(specStructs(ext, specs, ordCol, kinds, skeyOf): _*)).as("_m"))
-      .select(col("_ts"), col("_m.name").as("name"), col("_m.skey").as("skey"),
-        col("_m.kind").as("kind"), col("_m.v").as("v"), col("_m.ord").as("ord"),
-        col("_m.sidx").as("sidx"))
-      .filter(col("v").isNotNull)
-      .groupBy(window(col("_ts"), s"$bucketSec seconds").as("w"),
-        col("name"), col("skey"), col("kind"))
-      .agg(
-        max_by(col("sidx"), col("ord")).as("_fidx"),
-        sum(col("v")).as("_sum"),
-        count(lit(1)).as("m_count"),
-        max_by(col("v"), col("ord")).as("_last"),
-        (if (ladder.isEmpty) array().cast("array<bigint>")
-         else array(ladder.map(b =>
-           sum(when(col("v") <= b, 1L).otherwise(0L))): _*)).as("_hb"))
-      .select(
-        unix_timestamp(col("w.start")).as("bucket"),
-        col("name"),
-        map_from_entries(col("skey")).as("tags"),
-        kindStr(kinds, col("kind")).as("kind"),
-        when(col("kind") === kinds.indexOf("gauge"), col("_last"))
-          .otherwise(col("_sum")).as("m_sum"),
-        col("m_count"),
-        when(col("kind") === kinds.indexOf("histogram"), perSpecBuckets(specs, ladder))
-          .otherwise(array().cast("array<bigint>")).as("m_buckets"))
-  }
-
   /** Typed carriers for [[metricalizeStreamReplay]] (object-level so the
     * product encoders resolve).
     */
@@ -452,16 +396,17 @@ object Metricalize {
       kind: String, m_sum: Double, m_count: Long, m_buckets: Seq[Long],
       mismatches: Long)
 
-  /** Streaming metricalize with the BATCH arrival-order reset semantics —
-    * the flatMapGroupsWithState form of [[metricalize]]'s kind-replay
-    * (closes the one semantic divergence [[metricalizeStream]] documents):
+  /** Streaming metricalize: the reference flushes its state map on a
+    * processing-time tick (metricalize.rs:161-190); here the flush is an
+    * EVENT-TIME tumbling window + watermark, so emission is deterministic
+    * and replayable. It keeps the BATCH arrival-order reset semantics — the
+    * flatMapGroupsWithState form of [[metricalize]]'s kind-replay:
     * per (window, name, tags) series the state carries (kind, partials);
     * a kind flip INSIDE the window increments `mismatches` and resets the
     * partials, so the emitted row covers exactly the trailing same-kind run
     * — bit-identical to the batch replay of the same rows. State crosses
-    * micro-batches; each window's state starts empty (the reference's
-    * processing-time tick analog, metricalize.rs:161-190) and is emitted
-    * once, when the event-time timeout fires at window close.
+    * micro-batches; each window's state starts empty (the tick analog) and
+    * is emitted once, when the event-time timeout fires at window close.
     *
     * Replay order is (micro-batch arrival, ord within the batch) — the
     * stream analog of the reference's arrival order. A source that delivers

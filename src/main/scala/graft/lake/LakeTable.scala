@@ -28,8 +28,6 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
   private val manifestDir = s"$basePath/$tier/_manifests"
   private def fs: FileSystem = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def dataPath: String = dataDir
-
   /** Driver-side parallel map over partition-granular FS work (rename /
     * footer read / manifest write). The round-1 serial loop was fine at 10²
     * partitions and a commit-latency wall at 10⁵ — commit cost must stay
@@ -187,8 +185,6 @@ final class LakeTable(spark: SparkSession, basePath: String, tier: String, partC
       spark.read.option("basePath", dataDir)
         .parquet(committed.map(p => s"$dataDir/$partCol=$p"): _*)
   }
-
-  def readRaw(): DataFrame = spark.read.parquet(dataDir)
 
   /** Retention: drop partitions for which `expired` holds. Partition-predicate
     * delete + manifest removal; returns dropped partition values.

@@ -311,15 +311,24 @@ object Multimodal {
     * malformed (truncated garbage). All parameters are doc_id arithmetic so a
     * SQL oracle can recompute the expected dimensions.
     */
-  def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    val enc = udf { (id: Long) =>
-      if (id % 7 == 0) "XX".getBytes ++ Array.tabulate(8)(i => (id + i).toByte)
-      else if (id % 2 == 0)
+  def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] =
+    mediaRows(spark, dir, id =>
+      if (id % 2 == 0)
         encodeBmp((id % 640).toInt + 1, (id % 480).toInt + 1, 24)
       else
         encodeWav(8000 * ((id % 5).toInt + 1), (id % 2).toInt + 1,
-          ((id % 100).toInt + 1) * 1024)
+          ((id % 100).toInt + 1) * 1024))
+
+  /** (media_id, kind, payload) over `documents`: even doc_ids are images,
+    * odd ones audio; every 7th payload is malformed (truncated garbage), the
+    * rest come from `encode`.
+    */
+  private def mediaRows(spark: SparkSession, dir: String,
+      encode: Long => Array[Byte]): Dataset[MediaRow] = {
+    import spark.implicits._
+    val enc = udf { (id: Long) =>
+      if (id % 7 == 0) "XX".getBytes ++ Array.tabulate(8)(i => (id + i).toByte)
+      else encode(id)
     }
     spark.read.parquet(s"$dir/documents.parquet")
       .select(
@@ -339,25 +348,15 @@ object Multimodal {
     * deliberately malformed. All content is doc_id arithmetic, so a SQL
     * oracle recomputes the RESIZED/SAMPLED censuses exactly.
     */
-  def mediaTablePixels(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    val enc = udf { (id: Long) =>
-      if (id % 7 == 0) "XX".getBytes ++ Array.tabulate(8)(i => (id + i).toByte)
-      else if (id % 2 == 0)
+  def mediaTablePixels(spark: SparkSession, dir: String): Dataset[MediaRow] =
+    mediaRows(spark, dir, id =>
+      if (id % 2 == 0)
         encodeBmpPixels((id % 13).toInt + 2, (id % 11).toInt + 2,
           (x, y) => ((id + 3 * x + 7 * y) % 251).toInt)
       else
         encodeWavPcm(8000 * ((id % 5).toInt + 1), (((id + 1) / 2) % 2).toInt + 1,
           (id % 50).toInt + 4,
-          (f, c) => (((31 * id + 13 * f + 7 * c) % 65536) - 32768).toInt)
-    }
-    spark.read.parquet(s"$dir/documents.parquet")
-      .select(
-        col("doc_id").as("media_id"),
-        when(pmod(col("doc_id"), lit(2)) === 0, "image").otherwise("audio").as("kind"),
-        enc(col("doc_id")).as("payload"))
-      .as[MediaRow]
-  }
+          (f, c) => (((31 * id + 13 * f + 7 * c) % 65536) - 32768).toInt))
 
   /** Resize pipeline: images in, factor-2 nearest-neighbor downsample, the
     * RESIZED payload re-decoded into its census (proving the full

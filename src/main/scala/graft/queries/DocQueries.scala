@@ -477,22 +477,45 @@ object DocQueries {
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-    val bench = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
-      .select(slice(col("toks"), 6, 20).as("btoks"))
-      .filter(size(col("btoks")) >= 8)
-      .withColumn("i", explode(sequence(lit(1), size(col("btoks")) - 7)))
-      .select(md5(concat_ws(" ", slice(col("btoks"), col("i"), lit(8)))).as("g"))
-      .distinct()
-    docs.filter(size(col("toks")) >= 8)
-      .withColumn("i", explode(sequence(lit(1), size(col("toks")) - 7)))
-      .select(col("doc_id"), col("source"),
-        md5(concat_ws(" ", slice(col("toks"), col("i"), lit(8)))).as("g"))
-      .join(broadcast(bench), "g")
+    docGrams(docs)
+      .join(broadcast(benchGrams(docs)), "g")
       .groupBy(col("doc_id"), col("source"))
       .agg(countDistinct(col("g")).as("n_shared"))
       .orderBy(col("doc_id"))
   }
+
+  /** Number of " " in `text`: split-by-" " yields exactly #spaces+1 tokens
+    * (null text stays null and drops), so `spaces >= k - 1` is the word-count
+    * gate `size(split(text, " ")) >= k` that keeps the shingle kernel's
+    * short-doc whole-string branch from ever firing.
+    */
+  private def spaces(text: Column): Column =
+    length(text) - length(translate(text, " ", ""))
+
+  /** q69/q78's planted benchmark: md5 of every distinct 8-gram of the
+    * 20-token slice (tokens 6..25) of every 97th doc. Rejoining the slice
+    * with " " and re-splitting it in the kernel is the identity, so each
+    * gram is the `concat_ws(" ", slice(toks, i, 8))` of the slice.
+    */
+  private def benchGrams(docs: DataFrame): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
+      .select(concat_ws(" ", slice(split(col("text"), " "), 6, 20)).as("bt"))
+      .filter(spaces(col("bt")) >= 7)
+      .select(explode(graft.ops.Dedup.shingles(col("bt"), 8)).as("sh"))
+      .select(md5(col("sh")).as("g"))
+      .distinct()
+
+  /** (doc_id, source, g): md5 of each doc's distinct 8-grams, from the
+    * native one-pass scan (SketchExprs.WordShingles) — every 8-gram is a
+    * byte span of the text, and q69/q78 count `countDistinct(g)` per doc, so
+    * the kernel's per-doc distinctness leaves their result unchanged (q74's
+    * argument).
+    */
+  private def docGrams(docs: DataFrame): DataFrame =
+    docs.filter(spaces(col("text")) >= 7)
+      .select(col("doc_id"), col("source"),
+        explode(graft.ops.Dedup.shingles(col("text"), 8)).as("sh"))
+      .select(col("doc_id"), col("source"), md5(col("sh")).as("g"))
 
   /** DuckDB twin of [[decontaminate]]. */
   val decontaminateOracle: String =
@@ -521,6 +544,7 @@ object DocQueries {
     val counted = documents(s, dir)
       .select(col("source"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 2)
+      // every occurrence counts here, so the distinct-gram kernel cannot serve
       .withColumn("i", explode(sequence(lit(1), size(col("toks")) - 1)))
       .select(col("source"),
         concat_ws(" ", slice(col("toks"), col("i"), lit(2))).as("gram"))
@@ -549,28 +573,24 @@ object DocQueries {
 
   /** q71: repetition-degeneracy filter — distinct-3-gram ratio per doc flags
     * looping/degenerate text. Synthetic docs are repetition-free, so every
-    * 13th doc is planted as text+text (ratio ≈ ½) and only those flag. The
-    * per-doc distinct count is one explode + one doc-keyed aggregate — no
-    * per-doc window, no driver loop.
+    * 13th doc is planted as text+text (ratio ≈ ½) and only those flag. A
+    * per-row projection: `n3` is the 3-gram count, `d3` the size of the
+    * native distinct-shingle array — no explode and no doc-keyed aggregate,
+    * which is exact because doc_id is unique in `documents`.
     */
-  def repetitionFilter(s: SparkSession, dir: String): DataFrame = {
-    val planted = documents(s, dir)
+  def repetitionFilter(s: SparkSession, dir: String): DataFrame =
+    documents(s, dir)
       .withColumn("t",
         when(pmod(col("doc_id"), lit(13L)) === 0, concat_ws(" ", col("text"), col("text")))
           .otherwise(col("text")))
-      .select(col("doc_id"), col("source"), split(col("t"), " ").as("toks"))
+      .select(col("doc_id"), col("source"), col("t"), split(col("t"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
-    planted
-      .withColumn("i", explode(sequence(lit(1), size(col("toks")) - 2)))
       .select(col("doc_id"), col("source"),
-        md5(concat_ws(" ", slice(col("toks"), col("i"), lit(3)))).as("g"))
-      .groupBy(col("doc_id"), col("source"))
-      .agg(count(lit(1)).as("n3"), countDistinct(col("g")).as("d3"))
+        (size(col("toks")) - 2).cast("long").as("n3"),
+        size(graft.ops.Dedup.shingles(col("t"), 3)).cast("long").as("d3"))
       .withColumn("r", round(col("d3").cast("double") / col("n3"), 4))
       .filter(col("r") < 0.9)
-      .select(col("doc_id"), col("source"), col("n3"), col("d3"), col("r"))
       .orderBy(col("doc_id"))
-  }
 
   /** DuckDB twin of [[repetitionFilter]]. */
   val repetitionFilterOracle: String =
@@ -673,11 +693,9 @@ object DocQueries {
     // every 20-gram is a byte span of the text (spec-pinned vs the HOF
     // chain), the kernel's per-doc distinctness is invariant under the
     // duplicate-insensitive groupBy(g)->countDistinct(doc_id) aggregate,
-    // and the word-count gate is expressed as its space-count equivalent
-    // (split-by-" " yields exactly #spaces+1 tokens; null text still drops)
-    // so the kernel's short-doc whole-string branch never fires.
+    // and the word-count gate is its space-count equivalent.
     base.unionByName(clones)
-      .filter(length(col("text")) - length(translate(col("text"), " ", "")) >= 19)
+      .filter(spaces(col("text")) >= 19)
       .select(col("doc_id"),
         explode(graft.ops.Dedup.shingles(col("text"), 20)).as("sh"))
       .select(col("doc_id"), md5(col("sh")).as("g"))
@@ -764,13 +782,7 @@ object DocQueries {
     */
   def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-    val benchPlan = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
-      .select(slice(col("toks"), 6, 20).as("btoks"))
-      .filter(size(col("btoks")) >= 8)
-      .withColumn("i", explode(sequence(lit(1), size(col("btoks")) - 7)))
-      .select(md5(concat_ws(" ", slice(col("btoks"), col("i"), lit(8)))).as("g"))
-      .distinct()
+    val benchPlan = benchGrams(docs)
     // ONE derivation of the benchmark grams: persisted as an RDD (not a
     // CacheManager entry — the cache must outlive this builder for the
     // verify join, and ContextCleaner releases an RDD persist when the
@@ -788,10 +800,7 @@ object DocQueries {
     val bloom = bench.stat.bloomFilter("g", expectedNumItems = nGrams, fpp = 0.001)
     val bcBloom = s.sparkContext.broadcast(bloom)
     val mightContain = udf((g: String) => g != null && bcBloom.value.mightContainString(g))
-    docs.filter(size(col("toks")) >= 8)
-      .withColumn("i", explode(sequence(lit(1), size(col("toks")) - 7)))
-      .select(col("doc_id"), col("source"),
-        md5(concat_ws(" ", slice(col("toks"), col("i"), lit(8)))).as("g"))
+    docGrams(docs)
       .filter(mightContain(col("g"))) // Bloom prefilter: ~1000× join-input cut
       .join(bench, "g") // exact verify — no broadcast hint; the prefiltered
                         // stream is small enough for any join strategy

@@ -95,16 +95,6 @@ object RefRollup {
     (count, sum, buckets)
   }
 
-  /** Pairwise histogram merge: element-wise bucket add (same ladder required).
-    * The reference resets state on layout mismatch
-    * (metricalize.rs:233-248); we mirror by requiring equal layouts.
-    */
-  def mergeHistogram(a: (Long, Double, Array[Long]), b: (Long, Double, Array[Long]))
-      : (Long, Double, Array[Long]) = {
-    require(a._3.length == b._3.length, "bucket layout mismatch")
-    (a._1 + b._1, a._2 + b._2, a._3.zip(b._3).map { case (x, y) => x + y })
-  }
-
   /** Absolute→delta/rate normalization per series
     * (sink/buffer/metrics.rs:99-141): first observation → None; later →
     * value - prev, with the Prometheus counter-reset rule (negative delta ⇒

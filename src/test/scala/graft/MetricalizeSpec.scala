@@ -106,7 +106,7 @@ class MetricalizeSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, Long, String)]
     val df = stream.toDF().toDF("ts", "seq", "props")
       .withColumn("ts_ts", timestamp_seconds(col("ts")))
-    val out = Metricalize.metricalizeStream(df, "props",
+    val out = Metricalize.metricalizeStreamReplay(df, "props",
       Seq(
         Metricalize.MetricSpec("b_total", "counter", "$.bytes"),
         Metricalize.MetricSpec("b_gauge", "gauge", "$.bytes")),
